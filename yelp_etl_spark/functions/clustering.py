@@ -1,7 +1,7 @@
 """Distributed Lloyd's k-means over an embedding column.
 
 The iterative companion to the aggregate-only centroid ops
-(catalog_ext label_centroids) and the ANN family (functions/
+(plans/ext label_centroids) and the ANN family (functions/
 similarity.py): cluster the corpus itself, instead of probing it.
 Standard uses in a training-data pipeline: semantic dedup pre-bucketing,
 IVF coarse quantizer training (similarity.py's ivf_topk consumes

@@ -230,7 +230,8 @@ def simhash_sketches(
 ) -> DataFrame:
     """SimHash sketch per document: bit j of the sketch = sign of the sum
     over features of ±1 depending on bit j of xxhash64(feature).
-    Near-duplicate texts differ in few bits (compare with hamming64).
+    Near-duplicate texts differ in few bits (Hamming distance:
+    ``F.bit_count`` of the XOR).
 
     Shape: explode features → ONE groupBy(id) with ``bits`` flat
     conditional sums → assemble the sketch. One shuffle keyed on the
@@ -273,15 +274,6 @@ def simhash_sketches(
         half(0, hi_bits).alias("simhash_hi"),
         half(hi_bits, bits - hi_bits).alias("simhash_lo"),
     )
-
-
-def hamming64(a: Column, b: Column) -> Column:
-    return F.bit_count(a.bitwiseXOR(b))
-
-
-def simhash_hamming(hi_a: Column, lo_a: Column, hi_b: Column, lo_b: Column) -> Column:
-    """Hamming distance between two (hi, lo) simhash sketches."""
-    return hamming64(hi_a, hi_b) + hamming64(lo_a, lo_b)
 
 
 def connected_components(

@@ -7607,10 +7607,21 @@ _QUERIES_UNORDERED: dict[str, QuerySpec] = {
 }
 
 
-# Extension catalog (plans/catalog_ext.py) merges BEFORE the window is
-# assembled so extension queries (triangle_count, copurchase_pairs,
-# skew ops, …) are eligible for the driver's hard correctness gate.
-from yelp_etl_spark.plans.catalog_ext import EXTRA_QUERIES as _EXTRA_QUERIES  # noqa: E402
+# The extension theme modules (plans/ext/) register into
+# ext._shared.EXTRA_QUERIES at import; they merge, in registration
+# order, BEFORE the window is assembled so extension queries can
+# enter the correctness window below.
+from yelp_etl_spark.plans.ext import (  # noqa: E402,F401  (imports register)
+    ext_containers,
+    ext_graph,
+    ext_lakehouse,
+    ext_misc,
+    ext_ml,
+    ext_stats,
+    ext_stream,
+    ext_text,
+)
+from yelp_etl_spark.plans.ext._shared import EXTRA_QUERIES as _EXTRA_QUERIES  # noqa: E402
 
 for _name, (_fn, _oracle, _ops) in _EXTRA_QUERIES.items():
     _QUERIES_UNORDERED[_name] = QuerySpec(_fn, _oracle, _ops)

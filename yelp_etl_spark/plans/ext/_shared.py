@@ -1,7 +1,7 @@
 """Shared helpers + the collected extension-query registry.
 
-Every ext_<theme> module registers into EXTRA_QUERIES here; the
-plans/catalog_ext shim reorders it into the legacy order."""
+Every ext_<theme> module registers into EXTRA_QUERIES here;
+plans.catalog merges it into QUERIES in registration order."""
 
 
 from __future__ import annotations

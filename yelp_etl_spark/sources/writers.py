@@ -150,11 +150,6 @@ SPJ_CONFS = {
 }
 
 
-def enable_storage_partitioned_joins(spark) -> None:
-    for k, v in SPJ_CONFS.items():
-        spark.conf.set(k, v)
-
-
 def compact_parquet_dir(
     spark,
     path: str,
