@@ -7,8 +7,9 @@ cd "$(dirname "$0")/.."
 echo "== 1/5 catalog + window + bench-variance invariants =="
 python -m pytest tests/test_catalog_window.py tests/test_entry.py -q
 
-echo "== 2/5 test suite =="
+echo "== 2/5 test suite + benchmark-harness self-tests =="
 python -m pytest tests/ -q
+python -m pytest perfbench -q
 
 # capture the window FIRST: the exit status of a $(...) used inline in
 # an argument list is discarded even under set -e, so an import failure

@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from yelp_etl_spark.functions.checkpoint import truncate_lineage
+
 
 def word_frequencies(df: DataFrame, text_col: str) -> DataFrame:
     """Reduce a corpus to its (word, wfreq) table — the one
@@ -135,10 +137,11 @@ def learn_bpe(
     only driver traffic in the loop. ``words`` is the (word, wfreq,
     syms) DataFrame after all merges, for downstream encoding.
 
-    Every ``checkpoint_every`` merges the words plan is truncated with
-    ``localCheckpoint`` so the stacked fold expressions don't grow the
-    plan unboundedly on long trainings (the standard iterative-plan
-    hygiene also used by functions/graph.py's loops). Training stops
+    Every ``checkpoint_every`` merges the words plan is cut with
+    ``checkpoint.truncate_lineage`` (reliable when a checkpoint dir is
+    configured) so the stacked fold expressions don't grow the plan
+    unboundedly on long trainings (the standard iterative-plan hygiene
+    also used by functions/graph.py's loops). Training stops
     early when the best pair drops below ``min_pair_freq`` or no pairs
     remain.
     """
@@ -146,7 +149,7 @@ def learn_bpe(
     # pass. Without it every iteration's lineage re-runs the corpus
     # scan + word shuffle; with it iterations touch only the
     # vocabulary-sized checkpointed table.
-    words = with_symbols(word_frequencies(docs, text_col)).localCheckpoint(eager=True)
+    words = truncate_lineage(with_symbols(word_frequencies(docs, text_col)))
     merges: list[tuple[int, str, str, int]] = []
     for rank in range(1, num_merges + 1):
         best = (
@@ -161,7 +164,7 @@ def learn_bpe(
         merges.append((rank, lhs, rhs, freq))
         words = words.withColumn("syms", merge_pair_expr(F.col("syms"), lhs, rhs))
         if rank % checkpoint_every == 0:
-            words = words.localCheckpoint(eager=True)
+            words = truncate_lineage(words)
     return merges, words
 
 

@@ -42,9 +42,9 @@ def _qlog(p: Column) -> Column:
 # Public alias: the ONE micro-nat quantization every entropy/MI/WoE
 # site must share (the l-diversity audit, mutual_info_terms) — a
 # second inline copy of this expression is how the oracle-parity
-# convention silently forks. (validate.profile_columns moved to the
-# decomposed count form q(ln cnt) in round 7 — same 1e6 grid, log of
-# an integer count rather than of a probability.)
+# convention silently forks. (validate.profile_columns uses the
+# decomposed count form q(ln cnt) — same 1e6 grid, log of an integer
+# count rather than of a probability.)
 qlog = _qlog
 
 
@@ -196,14 +196,13 @@ def logistic_regression_train(
     from yelp_etl_spark.functions.checkpoint import truncate_lineage
 
     dim = len(df.select(vec_col).limit(1).collect()[0][0])
-    # Rounds were two keyed exchanges over the POSEXPLODED component
-    # table (65 rows/vector: z groupBy(id), gradient groupBy(pos))
+    # A round over the POSEXPLODED component table (65 rows/vector)
+    # needs two keyed exchanges (z groupBy(id), gradient groupBy(pos))
     # plus a per-round createDataFrame+broadcast of the weight vector
-    # — 39 scheduled jobs at sf0.1, scheduling-bound (longest job
-    # 0.32 s). With a fixed small dim the whole round is expressible
-    # over the VECTOR rows directly (r16 optimization round, guide
-    # §2.3/§2.4-adjacent: aggregate before you shuffle — here the
-    # shuffle disappears entirely):
+    # — 39 scheduled jobs at sf0.1, scheduling-bound. With a fixed
+    # small dim the whole round is expressible over the VECTOR rows
+    # directly (aggregate before you shuffle — here the shuffle
+    # disappears entirely):
     #   z_i  = one zip_with/aggregate fold per row (w as a LITERAL
     #          array — no broadcast build, no join),
     #   g    = ONE global aggregate with dim+1 partial-agg sums,
@@ -403,7 +402,7 @@ def boosted_stumps(
     Returns one row per round:
     (round, threshold, n_lo, n_hi, leaf_lo, leaf_hi, train_sse).
     """
-    from yelp_etl_spark.functions.checkpoint import truncate_lineage
+    from yelp_etl_spark.functions.checkpoint import cut, truncate_lineage
 
     spark = df.sparkSession
     feature_cols = [f for f, _ in rounds]
@@ -442,13 +441,14 @@ def boosted_stumps(
             F.col("sl").cast("double") * F.col("sl") / F.col("nl")
             + F.col("sh").cast("double") * F.col("sh") / F.col("nh")
         )
-        best = truncate_lineage(
+        # the row count rides the cut's job: no separate emptiness probe
+        best, n_best = cut(
             scored.withColumn("score", score)
             .orderBy(F.desc("score"), F.asc("t"))
             .limit(1),
-            eager=True,
+            F.count(F.lit(1)),
         )
-        if best.isEmpty():
+        if n_best == 0:
             # every candidate left one side empty: silently returning
             # fewer rounds than promised (and emptying the residual
             # frame through the cross join) would corrupt the model

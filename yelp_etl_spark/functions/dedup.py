@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from yelp_etl_spark.functions.checkpoint import truncate_lineage
+from yelp_etl_spark.functions.checkpoint import iterate, truncate_lineage
 from yelp_etl_spark.functions.text import fingerprint, tokens
 from yelp_etl_spark.sources.readers import fan_out
 
@@ -294,12 +294,11 @@ def connected_components(
     components, not pairs. Each round is one join + one groupBy on the
     node id (both shuffle on id, co-partitioned); rounds needed =
     graph diameter, which for near-dup families is tiny (2-4).
-    Per-round lineage is truncated via functions/checkpoint.
-    truncate_lineage (reliable checkpoint when the session has a
-    checkpoint dir — executor-loss-safe at cluster scale — else
-    localCheckpoint) so the plan doesn't grow linearly with
-    iterations; the driver-side loop only inspects a scalar
-    convergence count per round (no data collected).
+    The rounds run through functions/checkpoint.iterate: each round
+    ends in one lineage cut (reliable checkpoint when the session has a
+    checkpoint dir, else localCheckpoint), and the convergence value
+    rides that cut as an observed metric — the driver-side loop
+    inspects one scalar per round, no data collected.
     """
     fwd = edges.select(F.col(src_col).alias("eid"), F.col(dst_col).alias("nbr"))
     rev = edges.select(F.col(dst_col).alias("eid"), F.col(src_col).alias("nbr"))
@@ -313,38 +312,28 @@ def connected_components(
         .withColumn("component", F.col("node"))
     )
     labels = truncate_lineage(labels, eager=False)
-    # Per-round cost 2 joins + 2 actions → 1 join + 1 action (r15
-    # VERDICT #3, the Borůvka §2.6 treatment): the old-label merge is
-    # a UNION into the same keyed min — identical per-node value,
-    # min(self, neighborhood) — and convergence rides the checkpoint
-    # job as an observed metric instead of a separate limit(1).count()
-    # scan. Labels only ever DECREASE, so the label sum is strictly
-    # monotone and two equal consecutive sums ⟺ a fixpoint; the sum
-    # accumulates exactly in decimal(38,0) (1B nodes × 64-bit ids
-    # would overflow a long sum; 38 digits cannot).
-    from pyspark.sql import Observation
 
-    prev_sum = None
-    for _ in range(max_iter):
-        cand = (
+    # One join + one keyed min per round: the old label is UNIONed into
+    # the neighborhood min, min(self, neighborhood). Labels only ever
+    # DECREASE, so the label sum is strictly monotone and two equal
+    # consecutive sums ⟺ a fixpoint; the sum accumulates exactly in
+    # decimal(38,0) (1B nodes × 64-bit ids would overflow a long sum;
+    # 38 digits cannot).
+    def step(labels: DataFrame) -> DataFrame:
+        return (
             adj.join(labels, adj["nbr"] == labels["node"], "inner")
             .select(F.col("eid").alias("node"), F.col("component"))
             .unionByName(labels)
             .groupBy("node")
             .agg(F.min("component").alias("component"))
         )
-        obs = Observation()
-        labels = truncate_lineage(
-            cand.observe(
-                obs,
-                F.sum(F.col("component").cast("decimal(38,0)")).alias("s"),
-            ),
-            eager=True,
-        )
-        label_sum = obs.get["s"]
-        if prev_sum is not None and label_sum == prev_sum:
-            break
-        prev_sum = label_sum
+
+    labels, _ = iterate(
+        labels,
+        step,
+        max_iter,
+        until=F.sum(F.col("component").cast("decimal(38,0)")),
+    )
     return labels.select(F.col("node").alias("id"), "component")
 
 

@@ -11,11 +11,12 @@ re-derives them from source (5 iterations = 5 redundant scans+joins;
 measured 18s → ~2s at sf0.1). The per-iteration rank table is |V|
 rows — orders of magnitude smaller than |E| — so it broadcasts into
 the contribution join, leaving ONE shuffle per iteration (the
-contribution aggregate on dst). Per-iteration lineage is truncated via
-functions/checkpoint.truncate_lineage: RELIABLE checkpoint to durable
-storage when the session has a checkpoint dir (executor-loss-safe, the
-100 TB configuration — call checkpoint.set_checkpoint_dir once at
-startup), localCheckpoint in local mode where durability buys nothing.
+contribution aggregate on dst). Per-iteration lineage is cut through
+functions/checkpoint (``cut`` / ``iterate``): RELIABLE checkpoint to
+durable storage when the session has a checkpoint dir (executor-loss-
+safe, the 100 TB configuration — call checkpoint.set_checkpoint_dir
+once at startup), localCheckpoint in local mode where durability buys
+nothing.
 At 1B+ nodes the rank table no longer broadcasts — ``broadcast_state``
 (default ``"auto"``) switches the loop to a co-partitioned shuffle join
 against the cached, src-hash-partitioned edge list once the state table
@@ -28,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from yelp_etl_spark.functions.checkpoint import truncate_lineage
+from yelp_etl_spark.functions.checkpoint import cut, iterate, truncate_lineage
 
 # Above this many state rows (ranks / BFS frontier), "auto" stops
 # broadcasting the per-iteration state and uses a co-partitioned shuffle
@@ -46,6 +47,16 @@ LABEL_BROADCAST_MAX = DEFAULT_BROADCAST_MAX_STATE
 
 def _bcast_if(df: DataFrame, use_broadcast: bool) -> DataFrame:
     return F.broadcast(df) if use_broadcast else df
+
+
+def _use_broadcast(
+    broadcast_state: bool | str, n_state: int | None, broadcast_max_state: int
+) -> bool:
+    """Resolve a loop's ``broadcast_state``: ``"auto"`` broadcasts the
+    state while it has at most ``broadcast_max_state`` rows."""
+    if broadcast_state == "auto":
+        return n_state <= broadcast_max_state
+    return bool(broadcast_state)
 
 
 def encode_node_ids(
@@ -197,10 +208,7 @@ def pagerank(
         .cache()
     )
     n = deg.count()
-    if broadcast_state == "auto":
-        use_bcast = n <= broadcast_max_state
-    else:
-        use_bcast = bool(broadcast_state)
+    use_bcast = _use_broadcast(broadcast_state, n, broadcast_max_state)
     sym_w = sym.join(_bcast_if(deg, use_bcast), "src").select("src", "dst", "w")
     if not use_bcast:
         # Hash-partition the cached edge list on the join key: the
@@ -301,46 +309,37 @@ def _frontier_loop(
     edge list, dedup, anti-join the visited set on (labels + id), and
     eagerly truncate lineage each hop — ONE implementation so the
     broadcast heuristic / early-exit / checkpoint mechanics can never
-    diverge between the labeled and unlabeled forms."""
-    from pyspark.sql import Observation
+    diverge between the labeled and unlabeled forms.
 
+    Not an ``iterate`` loop: it stops on an EMPTY frontier (not on a
+    repeated value), and each hop's broadcast choice reads the previous
+    hop's frontier size — both come from the row count observed on the
+    hop's ``cut``, so a hop costs one action."""
     anti_keys = [*label_cols, "id"]
-    # per-hop frontier counts (broadcast heuristic + empty-frontier
-    # early exit) ride the checkpoint job as observed metrics — one
-    # action per hop instead of checkpoint + separate count (the
-    # connected_components/Borůvka §2.6 action collapse, r16)
-    obs0 = Observation()
-    frontier = truncate_lineage(
-        frontier0.observe(obs0, F.count(F.lit(1)).alias("n")), eager=True
-    )
-    n_frontier = obs0.get["n"]
+    n_rows = F.count(F.lit(1))
+    frontier, n_frontier = cut(frontier0, n_rows)
     visited = frontier
     for hop in range(1, max_hops + 1):
-        if broadcast_state == "auto":
-            use_bcast = n_frontier <= broadcast_max_state
-        else:
-            use_bcast = bool(broadcast_state)
-        obs = Observation()
-        frontier = truncate_lineage(
+        use_bcast = _use_broadcast(
+            broadcast_state, n_frontier, broadcast_max_state
+        )
+        frontier, n_frontier = cut(
             sym.join(
                 _bcast_if(frontier, use_bcast), F.col("src") == F.col("id")
             )
             .select(*label_cols, F.col("dst").alias("id"))
             .distinct()
             .join(visited, anti_keys, "left_anti")
-            .withColumn("dist", F.lit(hop).cast("long"))
-            .observe(obs, F.count(F.lit(1)).alias("n")),
-            eager=True,
+            .withColumn("dist", F.lit(hop).cast("long")),
+            n_rows,
         )
-        n_frontier = obs.get["n"]
         if n_frontier == 0:
             break
-        # visited stays a LAZY union of the already-checkpointed
-        # per-hop frontiers (r15 optimization round: eagerly
-        # re-truncating it each hop re-materialized the ENTIRE visited
-        # set every hop — O(|reached| · hops) extra writes plus one
-        # action per hop. The union's plan is max_hops checkpointed
-        # leaves, so lineage stays bounded without it).
+        # visited stays a LAZY union of the already-cut per-hop
+        # frontiers: re-cutting it each hop would re-materialize the
+        # ENTIRE visited set every hop — O(|reached| · hops) extra
+        # writes plus one action per hop. The union's plan is max_hops
+        # checkpointed leaves, so lineage stays bounded without it.
         visited = visited.union(frontier)
     sym.unpersist()
     return visited
@@ -433,8 +432,11 @@ def sssp_weighted(
     candidate rows plus one keyed partial-agg MIN; the edge list is
     the loop invariant — cached hash-partitioned on the join key when
     the shuffle path is reachable, and ``broadcast_state`` switches
-    per round from the already-materialized dist count exactly like
-    the BFS/pagerank loops. Lineage truncates every round.
+    per round on the dist size exactly like the BFS/pagerank loops.
+    Each round ends in one ``cut``; under ``"auto"`` the dist row count
+    is observed on that cut (the next round's broadcast choice reads
+    it, which is why this loop calls ``cut`` rather than ``iterate``),
+    so a round costs one action in every mode.
 
     Returns (id, dist) for every node within ``rounds`` edges of a
     seed; seeds at dist 0, unreached nodes absent.
@@ -444,31 +446,25 @@ def sssp_weighted(
         symmetric=symmetric,
         broadcast_state=broadcast_state,
     )
-    dist = truncate_lineage(
+    # the state size only drives the per-round auto decision; there is
+    # no early exit (with weights a stable node set can still be
+    # improving distances)
+    size = F.count(F.lit(1)) if broadcast_state == "auto" else None
+    dist, n_state = cut(
         seeds.select(F.col("id")).distinct()
         .withColumn("dist", F.lit(0).cast("long")),
-        eager=True,
+        size,
     )
-    # state counts exist ONLY to drive the per-round auto decision —
-    # forced modes never pay the extra count job, nor does the round
-    # whose result no decision consumes (there is no early exit: with
-    # weights a stable frontier can still be improving distances)
-    n_state = dist.count() if broadcast_state == "auto" else 0
-    for rnd in range(rounds):
-        if broadcast_state == "auto":
-            use_bcast = n_state <= broadcast_max_state
-        else:
-            use_bcast = bool(broadcast_state)
+    for _ in range(rounds):
+        use_bcast = _use_broadcast(broadcast_state, n_state, broadcast_max_state)
         cand = (
             sym.join(_bcast_if(dist, use_bcast), F.col("src") == F.col("id"))
             .select(F.col("dst").alias("id"), (F.col("dist") + F.col("w")).alias("dist"))
         )
-        dist = truncate_lineage(
+        dist, n_state = cut(
             dist.union(cand).groupBy("id").agg(F.min("dist").alias("dist")),
-            eager=True,
+            size,
         )
-        if broadcast_state == "auto" and rnd < rounds - 1:
-            n_state = dist.count()
     sym.unpersist()
     return dist
 
@@ -496,24 +492,24 @@ def label_propagation(
     round costs one labels-shuffle join plus two keyed aggregations —
     (dst,label) vote counts, then a dst arg-max via a single struct
     max (map-side combinable; no per-node window, no global sort).
-    Labels lineage is truncated each round. At 1B+ nodes every
-    structure here is keyed and partial-aggregated; nothing collects
-    to the driver.
+    The rounds run through ``checkpoint.iterate`` (one lineage cut per
+    round, no early exit). At 1B+ nodes every structure here is keyed
+    and partial-aggregated; nothing collects to the driver.
     """
     sym = _loop_edges(edges, src, dst, symmetric=True, dedup=True,
                       broadcast_state=False)
-    labels = truncate_lineage(
+    labels = (
         sym.select(F.col("src").alias("id")).distinct()
-        .withColumn("label", F.col("id")),
-        eager=True,
+        .withColumn("label", F.col("id"))
     )
-    for _ in range(iterations):
+
+    def step(labels: DataFrame) -> DataFrame:
         votes = (
             sym.join(labels, F.col("src") == F.col("id"))
             .groupBy("dst", "label")
             .agg(F.count("*").alias("cnt"))
         )
-        labels = truncate_lineage(
+        return (
             votes.groupBy("dst")
             .agg(
                 F.max(
@@ -525,9 +521,10 @@ def label_propagation(
             .select(
                 F.col("dst").alias("id"),
                 (-F.col("m.neg_label")).alias("label"),
-            ),
-            eager=True,
+            )
         )
+
+    labels, _ = iterate(labels, step, iterations)
     sym.unpersist()
     return labels
 
@@ -538,46 +535,60 @@ def k_core(
     src: str = "src",
     dst: str = "dst",
     rounds: int = 4,
-) -> DataFrame:
+) -> tuple[DataFrame, bool]:
     """k-core decomposition by synchronous peeling: each round removes
     every node whose current degree is below ``k`` (and the edges
     touching it); after enough rounds the survivors are exactly the
     k-core — the standard dense-subgraph/influence primitive
     (Seidman 1983, the same peeling GraphX's implementations unroll).
 
-    Fixed ``rounds`` rather than loop-to-fixpoint, like pagerank/LPA:
-    a data-dependent convergence loop can't unroll into a SQL oracle.
-    Returns (id, degree) over the edges surviving the last peel —
-    at fixpoint every degree is ≥ k; before it, the frame is the
-    exact intermediate state of round ``rounds``.
+    At most ``rounds`` peels run through ``checkpoint.iterate``, which
+    stops once the surviving-edge count repeats: the edge set only
+    shrinks, so an unchanged count is an unchanged set and every later
+    round would return it as is — the early exit never changes the
+    result of ``rounds`` unrolled peels (what the SQL oracles replay).
+    Returns ``(nodes, converged)``: ``nodes`` is (id, degree) over the
+    edges surviving the last peel — at the fixpoint every degree is
+    ≥ k; before it, the exact intermediate state of round ``rounds`` —
+    and ``converged`` says whether a round observed the fixpoint.
 
-    Scale shape: per round one keyed degree aggregation (map-side
-    combinable) plus two semi-joins of the edge list against the
-    ≤|V|-row keep set — every structure keyed on an 8-byte id, lineage
-    truncated per round, nothing driver-side. The edge list SHRINKS
-    monotonically, so later rounds cost less — the opposite of a
-    fan-out loop."""
-    sym = _loop_edges(edges, src, dst, symmetric=True, dedup=True,
-                      broadcast_state=False)
-    cur = sym
-    for _ in range(rounds):
-        keep = (
-            cur.groupBy("src")
-            .agg(F.count("*").alias("deg"))
-            .filter(F.col("deg") >= k)
-            .select("src")
+    The loop state is the CANONICAL edge set — each undirected edge
+    once, as (lower id, higher id), half the rows of the symmetrized
+    list; a node's degree counts the distinct edges it touches (a
+    self-loop once). Per round one keyed degree aggregation over both
+    endpoint columns (map-side combinable) plus two semi-joins of the
+    edge set against the ≤|V|-row keep set — every structure keyed on
+    an 8-byte id, one lineage cut per round, nothing driver-side. The
+    edge set SHRINKS monotonically, so later rounds cost less — the
+    opposite of a fan-out loop."""
+    lower = F.col(src) <= F.col(dst)
+    canonical = edges.select(
+        F.when(lower, F.col(src)).otherwise(F.col(dst)).alias("src"),
+        F.when(lower, F.col(dst)).otherwise(F.col(src)).alias("dst"),
+    ).distinct()
+
+    def degrees(e: DataFrame) -> DataFrame:
+        return (
+            e.select(F.col("src").alias("id"))
+            .unionAll(
+                e.filter(F.col("dst") != F.col("src")).select(
+                    F.col("dst").alias("id")
+                )
+            )
+            .groupBy("id")
+            .agg(F.count("*").cast("long").alias("degree"))
         )
-        cur = truncate_lineage(
-            cur.join(keep, "src", "left_semi").join(
-                keep.select(F.col("src").alias("dst")), "dst", "left_semi"
-            ),
-            eager=True,
-        )
-    out = cur.groupBy(F.col("src").alias("id")).agg(
-        F.count("*").cast("long").alias("degree")
+
+    def peel(e: DataFrame) -> DataFrame:
+        keep = degrees(e).filter(F.col("degree") >= k).select("id")
+        return e.join(
+            keep.withColumnRenamed("id", "src"), "src", "left_semi"
+        ).join(keep.withColumnRenamed("id", "dst"), "dst", "left_semi")
+
+    core, converged = iterate(
+        canonical, peel, rounds, until=F.count(F.lit(1))
     )
-    sym.unpersist()
-    return out
+    return degrees(core), converged
 
 
 def temporal_reachability(
@@ -603,32 +614,31 @@ def temporal_reachability(
     partitioned cached edge list with the time-respecting residual
     (edge.ts ≥ arrival), then a keyed min — the sssp_weighted shape
     with `ts` in place of dist+w, same 1B-node properties (keyed
-    8-byte shuffles, lineage truncated, no collects). Monotone:
-    arrivals only decrease, so fixed rounds under-approximate
-    reachability, never over-approximate."""
+    8-byte shuffles, one ``checkpoint.iterate`` cut per round, no
+    collects). Monotone: arrivals only decrease, so fixed rounds
+    under-approximate reachability, never over-approximate."""
     e = edges.select(
         F.col(src).alias("src"),
         F.col(dst).alias("dst"),
         F.col(ts).cast("long").alias("ts"),
     ).repartition("src").cache()
-    arrival = truncate_lineage(
-        seeds.select(
-            F.col("id"), F.col("t0").cast("long").alias("arrival")
-        ).groupBy("id").agg(F.min("arrival").alias("arrival")),
-        eager=True,
-    )
-    for _ in range(rounds):
+    arrival = seeds.select(
+        F.col("id"), F.col("t0").cast("long").alias("arrival")
+    ).groupBy("id").agg(F.min("arrival").alias("arrival"))
+
+    def step(arrival: DataFrame) -> DataFrame:
         cand = (
             e.join(arrival, F.col("src") == F.col("id"))
             .filter(F.col("ts") >= F.col("arrival"))
             .select(F.col("dst").alias("id"), F.col("ts").alias("arrival"))
         )
-        arrival = truncate_lineage(
+        return (
             arrival.unionByName(cand)
             .groupBy("id")
-            .agg(F.min("arrival").alias("arrival")),
-            eager=True,
+            .agg(F.min("arrival").alias("arrival"))
         )
+
+    arrival, _ = iterate(arrival, step, rounds)
     e.unpersist()
     return arrival
 
@@ -783,21 +793,18 @@ def boruvka_mst(
     count already taken for the convergence check, and it removes the
     2-3 scheduled jobs per fixpoint iteration that dominate wall clock
     on small tails. Driver-memory note: the guarded collect ships up
-    to ``contraction_collect_max`` (ca, cb) pairs through py4j and
-    re-broadcasts the labels — ~200-500 bytes/pair as materialized
-    Python Row objects (py4j framing + Row overhead dominate the two
-    raw longs), so the default 100k is ~20-50 MB each way; raise it
-    only with driver memory to match (the r10 default of 1M meant a
-    200-500 MB round-trip was possible before the distributed path
-    engaged). Above the guard, contraction runs distributed TO FIXPOINT
+    to ``contraction_collect_max`` (ca, cb) pairs through Arrow (16
+    bytes/pair), builds a driver-side union-find over them and
+    re-broadcasts the labels; raise the guard only with driver memory
+    to match. Above the guard, contraction runs distributed TO FIXPOINT
     (partial contraction would let a later round pick a non-MST edge
     between already-connected components) as parent-pointer doubling
     over the hooking graph: each component points at its chosen
     partner, the functional graph's only cycles are mutual 2-cycles
     (strict global edge order), each is rooted at its smaller id, and
     p ← p[p] converges in O(log depth) one-join rounds — one equi-join
-    per step where the previous neighbor-min formulation paid ~4 (the
-    r15 optimization-round change). The representative label choice
+    per step where a neighbor-min label walk pays ~4. The
+    representative label choice
     cannot change the output forest: edges are chosen before
     contraction and ties break by the global (w, src, dst) order, so
     any consistent relabeling yields the same next-round minima —
@@ -822,12 +829,11 @@ def boruvka_mst(
 
     def _cut(df: DataFrame) -> tuple[DataFrame, int]:
         # The count doubles as the cache fill AND is returned so
-        # callers never re-count the frame they just materialized
-        # (r15 optimization round — this loop is scheduling-bound:
-        # 169 jobs / 6.1 s of inter-job gaps profiled at sf0.1, so
-        # every removed action is wall-clock. A lazy-checkpoint
-        # variant that folded the checkpoint job into the count was
-        # tried and measured SLOWER — eager stays).
+        # callers never re-count the frame they just materialized —
+        # this loop is scheduling-bound (169 jobs / 6.1 s of inter-job
+        # gaps profiled at sf0.1), so every removed action is
+        # wall-clock. A lazy checkpoint folded into the count measured
+        # SLOWER than the eager one.
         out = truncate_lineage(df, eager=True).persist()
         n = out.count()
         pinned.append(out)
@@ -880,9 +886,8 @@ def boruvka_mst(
             # (w, src, dst) total order, so the forest is identical to
             # finishing distributed — pinned by
             # test_boruvka_hybrid_and_distributed_contraction_agree.
-            # Arrow collect instead of py4j Rows (r16): 5 flat longs
-            # per pair ≈ 40 B/row vs the 200-500 B/row materialized
-            # Row path the r10 driver-memory note measured — less
+            # Arrow collect: 5 flat longs per pair ≈ 40 B/row, where
+            # materialized py4j Rows cost 200-500 B/row — less
             # transfer, less driver garbage, same values.
             tbl = red.select(
                 "ca", "cb",
@@ -949,14 +954,13 @@ def boruvka_mst(
         # ONE action decides the round size AND (when small) delivers
         # the union-find input: collect at most cap+1 (ca, cb) pairs —
         # if the limit is not hit, these ARE all the chosen pairs, so
-        # the separate count and the second collect both disappear
-        # (r15 optimization round; the collect stays bounded by the
-        # same contraction_collect_max guard as before). The guard on
+        # no separate count or second collect is needed (the collect
+        # stays bounded by contraction_collect_max). The guard on
         # n_red keeps genuinely big rounds (early rounds at scale) on
         # a plain count instead of probing the limit.
         def _pairs(df):
-            # Arrow collect (r16): 16 B/pair vs the 200-500 B/row
-            # materialized py4j Row path — same values, same bound.
+            # Arrow collect: 16 B/pair vs 200-500 B/row for
+            # materialized py4j Rows — same values, same bound.
             t = df.toArrow()
             return list(
                 zip(t.column("ca").to_pylist(), t.column("cb").to_pylist())
@@ -1003,11 +1007,10 @@ def boruvka_mst(
                 )
             )
         else:
-            # PARENT-POINTER contraction (replaced the min-label
-            # neighbor-propagation fixpoint in the r15 optimization
-            # round — that form re-joined the symmetrized pair graph
-            # AND the label table every iteration, ~4 joins + 2 actions
-            # per step; this one needs exactly ONE equi-join per step).
+            # PARENT-POINTER contraction: exactly ONE equi-join per
+            # step, where a min-label neighbor-propagation fixpoint
+            # re-joins the symmetrized pair graph AND the label table
+            # every iteration (~4 joins + 2 actions per step).
             # Every component points at the partner of its chosen edge.
             # With a strict global (w, src, dst) edge order the only
             # cycles in that functional graph are MUTUAL 2-cycles (a
@@ -1016,7 +1019,7 @@ def boruvka_mst(
             # id yields a rooted forest over exactly the hooking
             # graph's components, and pointer doubling (p ← p[p])
             # reaches the fixpoint in O(log depth) rounds. Same
-            # component partition as the old neighbor-min walk — and
+            # component partition as a neighbor-min walk — and
             # the docstring's invariant stands: any consistent
             # relabeling yields the same forest, since edges are
             # chosen before contraction.
@@ -1051,10 +1054,9 @@ def boruvka_mst(
                         ).alias("__changed"),
                     )
                 )
-                # TWO actions per doubling step instead of three: the
-                # full-scan changed-count doubles as the cache fill,
-                # so the old count + separate limit(1) probe collapse
-                # into one job (r15 optimization round).
+                # TWO actions per doubling step: the full-scan
+                # changed-count doubles as the cache fill, so no
+                # separate count or limit(1) probe is needed.
                 nxt = truncate_lineage(nxt, eager=True).persist()
                 pinned.append(nxt)
                 changed = nxt.filter(F.col("__changed")).count()
@@ -1125,12 +1127,11 @@ def certify_spanning_forest(
 ) -> int:
     """Certify that ``forest`` is a spanning forest of the graph given
     by ``edges`` and return the graph's component count — the cheap
-    independent certificate for boruvka_mst's forest identity
-    (r15 VERDICT #7).
+    independent certificate for boruvka_mst's forest identity.
 
-    The r9-r15 certificate ran label-propagation connected components
-    over the FULL edge list (E-sized work × diameter rounds) just to
-    count components for the |MST| = |V| − #components identity. But
+    Label-propagation connected components over the FULL edge list
+    (E-sized work × diameter rounds) would count components for the
+    |MST| = |V| − #components identity. But
     the identity only certifies two properties — the forest is ACYCLIC
     and it SPANS (connects everything its graph connects) — and both
     are checkable against the V-sized forest the query has already

@@ -423,8 +423,10 @@ EXTRA_QUERIES.update(
 def q_kcore_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree distribution after 4 peeling rounds of the 3-core on the
     thin supplier↔part graph (graph.k_core): one keyed degree agg +
-    two semi-joins per round over a monotonically shrinking edge list.
-    The oracle unrolls the same 4 peels as chained CTEs."""
+    two semi-joins per round over a monotonically shrinking edge list,
+    stopping early once a peel removes nothing (later peels would
+    return the same edges). The oracle unrolls the same 4 peels as
+    chained CTEs."""
     from yelp_etl_spark.functions.graph import k_core
 
     lineitem = _t(spark, sf_dir, "lineitem")
@@ -432,7 +434,7 @@ def q_kcore_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_suppkey") * 2).alias("src"),
         (F.col("l_partkey") * 2 + 1).alias("dst"),
     )
-    nodes = k_core(edges, k=3, rounds=4)
+    nodes, _ = k_core(edges, k=3, rounds=4)
     return (
         nodes.groupBy("degree")
         .agg(F.count("*").cast("long").alias("n_nodes"))
@@ -1162,13 +1164,15 @@ def q_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate SFs and the 10× probe) means the output IS the true k-core
     fixed point; a deeper cascade would report converged=false rather
     than silently truncate — the same bounded-iteration contract
-    bfs_distances/sssp carry. Each round is two semi-joins + one
-    map-side-combinable degree agg on the current edge frame, with
-    lineage truncated per round (localCheckpoint) so round j never
-    replays rounds 1..j-1; at 100 TB the frame only shrinks. Basket
-    cap ≤3 bounds the edge-synthesis self-join input (the adamic_adar
-    rule: cap BEFORE the join). Oracle: the same 6 rounds unrolled as
-    MATERIALIZED CTEs."""
+    bfs_distances/sssp carry. The peeling is functions/graph.k_core
+    (two semi-joins + one map-side-combinable degree agg per round,
+    one lineage cut per round, stopping once the edge count repeats);
+    every core edge is counted at both endpoints, so core_edges =
+    Σdegree / 2. Basket cap ≤3 bounds the edge-synthesis self-join
+    input (the adamic_adar rule: cap BEFORE the join). Oracle: the
+    same 6 rounds unrolled as MATERIALIZED CTEs."""
+    from yelp_etl_spark.functions.graph import k_core
+
     li = (
         _t(spark, sf_dir, "lineitem")
         .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
@@ -1177,64 +1181,20 @@ def q_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
     small = li.groupBy("o").agg(F.count("*").alias("bs")).filter(
         F.col("bs") <= 3
     ).select("o")
-    from pyspark.sql import Observation
-
     a = li.join(small, "o").alias("a")
     b = li.alias("b")
-    # per-round edge counts ride the checkpoint job as observed
-    # metrics (1 action/round instead of checkpoint + separate count —
-    # the connected_components/Borůvka §2.6 action-collapse, r16)
-    obs0 = Observation()
-    edges = (
-        a.join(b, (F.col("a.o") == F.col("b.o")) & (F.col("a.p") < F.col("b.p")))
-        .select(F.col("a.p").alias("u"), F.col("b.p").alias("v"))
-        .distinct()
-        .observe(obs0, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    k, rounds = 6, 6
-    prev_edges = obs0.get["n"]
-    converged = False
-    for _ in range(rounds):
-        deg = (
-            edges.select(F.col("u").alias("x"))
-            .unionAll(edges.select(F.col("v").alias("x")))
-            .groupBy("x")
-            .agg(F.count("*").alias("d"))
-        )
-        keep = deg.filter(F.col("d") >= k).select("x")
-        obs = Observation()
-        edges = (
-            edges.join(keep.withColumnRenamed("x", "u"), "u", "left_semi")
-            .join(keep.withColumnRenamed("x", "v"), "v", "left_semi")
-            .select("u", "v")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        n = obs.get["n"]
-        if n == prev_edges:
-            converged = True
-            break
-        prev_edges = n
-    nodes = edges.select(F.col("u").alias("x")).union(
-        edges.select(F.col("v").alias("x"))
-    ).distinct()
-    return (
-        nodes.agg(
-            F.count("*").cast("long").alias("core_nodes"),
-            F.sum("x").cast("long").alias("node_id_sum"),
-        )
-        .crossJoin(
-            F.broadcast(
-                edges.agg(F.count("*").cast("long").alias("core_edges"))
-            )
-        )
-        .select(
-            "core_nodes",
-            "core_edges",
-            "node_id_sum",
-            F.lit(converged).alias("converged"),
-        )
+    # k_core deduplicates its canonical (lower, higher) edge set itself
+    edges = a.join(
+        b, (F.col("a.o") == F.col("b.o")) & (F.col("a.p") < F.col("b.p"))
+    ).select(F.col("a.p").alias("u"), F.col("b.p").alias("v"))
+    nodes, converged = k_core(edges, k=6, src="u", dst="v", rounds=6)
+    return nodes.agg(
+        F.count("*").cast("long").alias("core_nodes"),
+        F.coalesce(F.expr("sum(degree) div 2"), F.lit(0))
+        .cast("long")
+        .alias("core_edges"),
+        F.sum("id").cast("long").alias("node_id_sum"),
+        F.lit(converged).alias("converged"),
     )
 
 
@@ -1337,24 +1297,21 @@ def q_boruvka_mst(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus an edge-for-edge pytest twin: no SQL engine can express the
     iterative contraction, so the query verifies the forest identity
     |MST| = |V| − #components against INDEPENDENT label-propagation
-    components (runs at any scale) and RAISES on mismatch (r10 ADVICE:
-    a recorded-but-unchecked boolean only surfaces if the driver
-    happens to compare this row that round — the count comparison is
-    already computed, so failing loudly costs nothing), while the full
+    components (runs at any scale) and RAISES on mismatch (a
+    recorded-but-unchecked boolean only surfaces if a reader happens
+    to compare this row — the count comparison is already computed,
+    so failing loudly costs nothing), while the full
     edge-for-edge Kruskal cross-check (same total order, union-find)
     lives in tests/test_functions.py::test_boruvka_matches_kruskal_fixture
     on the same fixture graph — moved out of this bench-facing query so
     the bench line times the OPERATOR, not an in-driver verification
-    harness (r9 verdict: the collect+Kruskal was ~10 s of a 19.6 s
-    bench row)."""
+    harness (the collect+Kruskal was ~10 s of a 19.6 s bench row)."""
     from yelp_etl_spark.functions.graph import boruvka_mst, certify_spanning_forest
 
     edges = copurchase_edges(spark, sf_dir)
     mst = boruvka_mst(edges)
     # ONE aggregate over the exploded endpoints delivers n_nodes AND
-    # n_edges (count of exploded rows = 2·|E|) — was a union+distinct+
-    # count plus a separate count, i.e. two scheduled jobs (r16
-    # optimization round, guide §2.6)
+    # n_edges (count of exploded rows = 2·|E|) in one scheduled job
     gstats = (
         edges.select(
             F.explode(F.array(F.col("src"), F.col("dst"))).alias("n")
@@ -1374,7 +1331,7 @@ def q_boruvka_mst(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(-F.col("w")).cast("long").alias("affinity_captured"),
     ).first()
     n_mst = stats["n_mst_edges"]
-    # Independent certificate (r15 VERDICT #7): union-find + broadcast
+    # Independent certificate: union-find + broadcast
     # cross-edge check against the V-sized forest already materialized
     # above, instead of an E-sized label-propagation components pass —
     # certify_spanning_forest raises on an acyclicity/spanning
@@ -1429,13 +1386,15 @@ def q_ktruss_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     ties). Exactly ``ROUNDS`` peel iterations run on both engines (the
     kcore_peeling fixed-round convention — the oracle unrolls the same
     rounds in SQL), each one wedge join |N(u) ∩ N(v)| per edge + one
-    keyed filter; per-round lineage is truncated and stats-barriered
-    (the boruvka_mst localCheckpoint statistics-compounding note:
+    keyed filter; per-round lineage is cut (functions/checkpoint.cut)
+    and stats-barriered (the boruvka_mst statistics-compounding note:
     support joins reference the edge set three times per round).
     Output: the support histogram of the final surviving edge set.
     Scale: support counting is the triangle-enumeration shape whose
     degree-ordered variant triangle_count documents; rounds are a
     fixed constant, edges only shrink."""
+    from yelp_etl_spark.functions.checkpoint import cut
+
     ROUNDS, K = 3, 4
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
     small = li.groupBy("l_orderkey").agg(F.count("*").alias("np")).filter(
@@ -1455,10 +1414,10 @@ def q_ktruss_support(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    # localCheckpoint(eager) alone materializes AND truncates; with a
-    # fixed 3-round loop the inherited-stats compounding stays ~4³ —
-    # far from the boruvka_mst regime that needs the persist barrier
-    e = e.localCheckpoint(eager=True)
+    # an eager cut alone materializes AND truncates; with a fixed
+    # 3-round loop the inherited-stats compounding stays ~4³ — far from
+    # the boruvka_mst regime that needs the persist barrier
+    e, _ = cut(e)
     sup = None
     for _ in range(ROUNDS):
         # DEGREE-ORDERED support counting (the triangle_count O(m^1.5)
@@ -1471,24 +1430,15 @@ def q_ktruss_support(spark: SparkSession, sf_dir: str) -> DataFrame:
             e.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
         deg = sym.groupBy("u").agg(F.count("*").alias("dg"))
+        u_first = (F.col("du") < F.col("dv")) | (
+            (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
+        )
         oe = (
             e.join(deg.select(F.col("u").alias("u"), F.col("dg").alias("du")), "u")
             .join(deg.select(F.col("u").alias("v"), F.col("dg").alias("dv")), "v")
             .select(
-                F.when(
-                    (F.col("du") < F.col("dv"))
-                    | ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))),
-                    F.col("u"),
-                )
-                .otherwise(F.col("v"))
-                .alias("src"),
-                F.when(
-                    (F.col("du") < F.col("dv"))
-                    | ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))),
-                    F.col("v"),
-                )
-                .otherwise(F.col("u"))
-                .alias("dst"),
+                F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("src"),
+                F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
             )
         )
         x = oe.alias("x")
@@ -1517,30 +1467,17 @@ def q_ktruss_support(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("y.dst").alias("c"),
             )
         )
-        credits = (
-            tri.select(
-                F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
-            )
-            .union(
-                tri.select(
-                    F.least("a", "c").alias("u"),
-                    F.greatest("a", "c").alias("v"),
-                )
-            )
-            .union(
-                tri.select(
-                    F.least("b", "c").alias("u"),
-                    F.greatest("b", "c").alias("v"),
-                )
-            )
+        ab, ac, bc = (
+            tri.select(F.least(x, y).alias("u"), F.greatest(x, y).alias("v"))
+            for x, y in (("a", "b"), ("a", "c"), ("b", "c"))
         )
+        credits = ab.union(ac).union(bc)
         sup = credits.groupBy("u", "v").agg(
             F.count("*").cast("long").alias("s")
         )
-        sup = sup.localCheckpoint(eager=True)
-        e = sup.filter(F.col("s") >= K - 2).select("u", "v").localCheckpoint(
-            eager=True
-        )
+        sup, _ = cut(sup)
+        # a filter over the cut frame: its lineage is already bounded
+        e = sup.filter(F.col("s") >= K - 2).select("u", "v")
     return (
         sup.filter(F.col("s") >= K - 2)
         .groupBy("s")
@@ -1602,13 +1539,12 @@ EXTRA_QUERIES.update(
 
 
 # --------------------------------------------------------------------------
-# Round 10: exact value-oracle twin for the rows-only boruvka_mst
+# Exact value-oracle twin for the rows-only boruvka_mst
 # --------------------------------------------------------------------------
 
 
 def q_boruvka_mst_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact oracle twin for boruvka_mst (the only rows-only catalog
-    entry without a `_checked` companion until round 10): run the FULL
+    """Exact oracle twin for the rows-only boruvka_mst: run the FULL
     distributed Borůvka on a constructed graph whose unique minimum
     spanning forest is known in closed form, so DuckDB can state the
     answer without computing an MST while Spark must derive it through
@@ -1624,13 +1560,13 @@ def q_boruvka_mst_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     directly; any wrong hook, partial contraction, or dropped/extra
     edge in the distributed run changes the per-brand counts, weight
     sums, or the endpoint checksum. Scale: one windowed pass to build
-    edges, then the boruvka_mst operator (SCALING.md r10: one
-    data-sized reduce, geometric rounds).
+    edges, then the boruvka_mst operator (SCALING.md: one data-sized
+    reduce, geometric rounds).
 
-    The twin FORCES the distributed machinery it certifies (r10
-    ADVICE: with the production defaults every fixture-scale graph was
-    solved by the round-0 driver Kruskal, so the oracle validated only
-    that shortcut): ``driver_finish_max=0`` makes every hooking round
+    The twin FORCES the distributed machinery it certifies (with the
+    production defaults every fixture-scale graph is solved by the
+    round-0 driver Kruskal, so the oracle would validate only that
+    shortcut): ``driver_finish_max=0`` makes every hooking round
     run the distributed struct-min + relabel + re-reduce, and the
     size-relative ``contraction_collect_max = min(|V|/8, 100k)`` keeps
     the dominant early contractions on the distributed min-label +
